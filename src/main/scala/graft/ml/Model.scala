@@ -73,6 +73,23 @@ trait DiffModel extends Serializable {
   /** d(logLoss)/d(flat) for one example, same layout as weights.flat. */
   def gradient(x: Array[Double], y: Double): Array[Double]
 
+  /** ADDS d(logLoss)/d(flat) for one example into `acc` (same layout as
+    * weights.flat) — the minibatch SGD kernel's accumulator, so a batch
+    * costs no per-example gradient array. The default allocates
+    * [[gradient]] and adds it element-wise. Layouts whose backprop
+    * writes every gradient element exactly once per example
+    * ([[FusedGradient]]: linear, MLP, layered nets) accumulate in place
+    * instead; the float operations and their order are those of the
+    * default, so trained weights are bit-identical. The conv models
+    * keep the default: their kernel gradients sum over every conv
+    * position, and adding those terms straight into `acc` would
+    * re-associate the batch sum. */
+  def addGradient(x: Array[Double], y: Double, acc: Array[Double]): Unit = {
+    val g = gradient(x, y)
+    var i = 0
+    while (i < acc.length) { acc(i) += g(i); i += 1 }
+  }
+
   def predictLabel(x: Array[Double]): Double =
     if (predictProb(x) >= 0.5) 1.0 else 0.0
 
@@ -82,11 +99,24 @@ trait DiffModel extends Serializable {
   }
 }
 
+/** A [[DiffModel]] whose backprop writes each gradient element exactly
+  * once per example: it implements [[addGradient]] as the one backprop
+  * loop, and [[gradient]] is that loop run into a zero array. */
+private[ml] trait FusedGradient extends DiffModel {
+  override def addGradient(x: Array[Double], y: Double, acc: Array[Double]): Unit
+
+  final def gradient(x: Array[Double], y: Double): Array[Double] = {
+    val g = new Array[Double](weights.flat.length)
+    addGradient(x, y, g)
+    g
+  }
+}
+
 /** Linear/logistic model — the oracle-able special case of a Keras model
   * used throughout the training and prediction operators. Weights layout:
   * [w_0..w_{d-1}, b].
   */
-final case class LinearModel(weights: ModelWeights) extends DiffModel {
+final case class LinearModel(weights: ModelWeights) extends FusedGradient {
   private val d = weights.flat.length - 1
   def w: Array[Double] = weights.flat.take(d)
   def b: Double = weights.flat(d)
@@ -104,14 +134,11 @@ final case class LinearModel(weights: ModelWeights) extends DiffModel {
 
   /** Logistic-loss gradient contribution of one example, added into acc
     * (scaled by -lr when used as an SGD step). */
-  def gradient(x: Array[Double], y: Double): Array[Double] = {
-    val p = predictProb(x)
-    val g = new Array[Double](d + 1)
-    val err = p - y
+  override def addGradient(x: Array[Double], y: Double, acc: Array[Double]): Unit = {
+    val err = predictProb(x) - y
     var i = 0
-    while (i < d) { g(i) = err * x(i); i += 1 }
-    g(d) = err
-    g
+    while (i < d) { acc(i) += err * x(i); i += 1 }
+    acc(d) += err
   }
 }
 
@@ -132,7 +159,7 @@ object LinearModel {
   * ∂z1_j = err·w2_j·(1 − h_j²); ∂W1[j,i] = ∂z1_j·x_i; ∂b1 = ∂z1.
   */
 final case class MlpModel(weights: ModelWeights, din: Int, hidden: Int)
-    extends DiffModel {
+    extends FusedGradient {
   require(weights.flat.length == hidden * din + hidden + hidden + 1,
     s"weight layout mismatch: ${weights.flat.length} for din=$din hidden=$hidden")
   private val offB1 = hidden * din
@@ -160,22 +187,20 @@ final case class MlpModel(weights: ModelWeights, din: Int, hidden: Int)
 
   def predictProb(x: Array[Double]): Double = forward(x)._2
 
-  def gradient(x: Array[Double], y: Double): Array[Double] = {
+  override def addGradient(x: Array[Double], y: Double, acc: Array[Double]): Unit = {
     val f = weights.flat
     val (h, p) = forward(x)
-    val g = new Array[Double](f.length)
     val err = p - y
-    g(offB2) = err
+    acc(offB2) += err
     var j = 0
     while (j < hidden) {
-      g(offW2 + j) = err * h(j)
+      acc(offW2 + j) += err * h(j)
       val dz1 = err * f(offW2 + j) * (1.0 - h(j) * h(j))
-      g(offB1 + j) = dz1
+      acc(offB1 + j) += dz1
       var i = 0
-      while (i < din) { g(j * din + i) = dz1 * x(i); i += 1 }
+      while (i < din) { acc(j * din + i) += dz1 * x(i); i += 1 }
       j += 1
     }
-    g
   }
 }
 
@@ -196,7 +221,7 @@ object MlpModel {
   * [[SoftmaxMlpModel]] (K-way softmax, cross-entropy) plug in only
   * their output activation and initial delta, so a fix to the offset
   * math or the inner loops lands in ONE place (round-13 review). */
-private[ml] trait LayeredNet extends DiffModel {
+private[ml] trait LayeredNet extends FusedGradient {
   def din: Int
   def hiddens: Seq[Int]
   /** Width of the output layer (1 for sigmoid, K for softmax). */
@@ -256,10 +281,10 @@ private[ml] trait LayeredNet extends DiffModel {
     acts
   }
 
-  final def gradient(x: Array[Double], y: Double): Array[Double] = {
+  final override def addGradient(x: Array[Double], y: Double,
+                                 acc: Array[Double]): Unit = {
     val f = weights.flat
     val acts = forward(x)
-    val g = new Array[Double](f.length)
     var delta = outputDelta(acts(nLayers), y)
     var l = nLayers - 1
     while (l >= 0) {
@@ -268,8 +293,8 @@ private[ml] trait LayeredNet extends DiffModel {
       while (j < delta.length) {
         val row = wOff(l) + j * dims(l)
         var i = 0
-        while (i < in.length) { g(row + i) = delta(j) * in(i); i += 1 }
-        g(bOff(l) + j) = delta(j)
+        while (i < in.length) { acc(row + i) += delta(j) * in(i); i += 1 }
+        acc(bOff(l) + j) += delta(j)
         j += 1
       }
       if (l > 0) {
@@ -289,7 +314,6 @@ private[ml] trait LayeredNet extends DiffModel {
       }
       l -= 1
     }
-    g
   }
 }
 

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions.col
   *
   *   per epoch:  broadcast center weights
   *               → mapPartitions: local minibatch SGD per partition
-  *               → treeAggregate the per-partition results (one vector
-  *                 per partition, element-wise combine — O(log n) depth)
+  *               → treeFold the per-partition [[MergeStats]] (a fixed
+  *                 two-level fold; at most [[mergeFanIn]] partials
+  *                 reach the driver)
   *               → driver applies the [[UpdateRule]] to move the center
   *
   * Every boundary is a Spark-managed stage, so training is
@@ -201,25 +202,43 @@ object Trainers {
   /** One local-SGD pass over a partition's rows, for ANY [[DiffModel]]
     * (the reference's worker loop, `workers.py › SGDWorker [H]`, is
     * likewise model-agnostic — it calls into the compiled model's
-    * gradient). Deterministic: rows are consumed in partition order. */
+    * gradient). Deterministic: rows are consumed in partition order.
+    * Allocation-free per example: each gradient is added into one batch
+    * accumulator ([[DiffModel.addGradient]]), and every minibatch step
+    * updates a private copy of the weights in place. The copy is made
+    * once per call because `init` may be a broadcast value that every
+    * task of a `local[N]` executor shares. */
   private def localSgd(
       init: DiffModel, rows: Iterator[(Array[Double], Double)],
       lr: Double, batchSize: Int): (ModelWeights, Long) = {
-    var m = init
+    val w = init.weights.flat.clone()
+    val m = init.withWeights(init.weights.copy(flat = w))
+    val g = new Array[Double](w.length)
     var n = 0L
-    rows.grouped(batchSize).foreach { batch =>
-      val g = new Array[Double](m.weights.flat.length)
-      batch.foreach { case (x, y) =>
-        val gi = m.gradient(x, y)
-        var i = 0
-        while (i < g.length) { g(i) += gi(i); i += 1 }
-        n += 1
-      }
-      val scale = lr / batch.size
-      m = m.withWeights(m.weights.copy(
-        flat = Array.tabulate(g.length)(i => m.weights.flat(i) - scale * g(i))))
+    var inBatch = 0
+    def step(): Unit = {
+      val scale = lr / inBatch
+      var i = 0
+      while (i < w.length) { w(i) -= scale * g(i); g(i) = 0.0; i += 1 }
+      inBatch = 0
     }
+    while (rows.hasNext) {
+      val (x, y) = rows.next()
+      m.addGradient(x, y, g)
+      n += 1
+      inBatch += 1
+      if (inBatch == batchSize) step()
+    }
+    if (inBatch > 0) step()
     (m.weights, n)
+  }
+
+  /** Argument checks shared by the public trainers. A batch size below 1
+    * would otherwise train each partition as one silent giant batch. */
+  private def checkArgs(epochs: Int, batchSize: Int, workers: Int = 1): Unit = {
+    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
+    require(workers >= 1, s"numWorkers must be >= 1, got $workers")
+    require(epochs >= 0, s"epochs must be >= 0, got $epochs")
   }
 
   /** Bounded fan-in for the distributed merge: at most this many
@@ -325,6 +344,7 @@ object Trainers {
   def trainSingleModel[M <: DiffModel](
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       epochs: Int = 5, lr: Double = 0.5, batchSize: Int = 32): M = {
+    checkArgs(epochs, batchSize)
     val data = toExamples(df, featuresCol, labelCol).coalesce(1)
     var model: DiffModel = init
     for (_ <- 0 until epochs) {
@@ -351,6 +371,7 @@ object Trainers {
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       numModels: Int = 4, epochs: Int = 5, lr: Double = 0.5,
       batchSize: Int = 32): Seq[M] = {
+    checkArgs(epochs, batchSize, numModels)
     toExamples(df, featuresCol, labelCol)
       .repartition(numModels)
       .mapPartitions { it =>
@@ -401,12 +422,13 @@ object Trainers {
 
   /** The synchronous data-parallel trainer (DistributedTrainer redesign,
     * `trainers.py ~L270-360 [H]`). One Spark stage per epoch; the only
-    * driver-side data is one weight vector per partition (numWorkers ×
-    * nParams doubles), reduced element-wise. */
+    * driver-side data is the folded [[MergeStats]] partials — at most
+    * [[mergeFanIn]] of them, whatever numWorkers is. */
   def trainDistributedModel[M <: DiffModel](
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       numWorkers: Int = 4, epochs: Int = 5, lr: Double = 0.5,
       batchSize: Int = 32, rule: UpdateRule = Averaging): M = {
+    checkArgs(epochs, batchSize, numWorkers)
     val data = toExamples(df, featuresCol, labelCol)
       .repartition(numWorkers).persist()
     try {
@@ -440,6 +462,7 @@ object Trainers {
       df: DataFrame, featuresCol: String, labelCol: String, init: M,
       numWorkers: Int = 4, epochs: Int = 5, lr: Double = 0.5,
       batchSize: Int = 32, rule: UpdateRule = Averaging): TrainingReport[M] = {
+    checkArgs(epochs, batchSize, numWorkers)
     val t0 = System.nanoTime()
     val data = toExamples(df, featuresCol, labelCol)
       .repartition(numWorkers).persist()
@@ -480,6 +503,7 @@ object Trainers {
       numWorkers: Int = 4, maxEpochs: Int = 50, lr: Double = 0.5,
       batchSize: Int = 32, rule: UpdateRule = Averaging,
       patience: Int = 3, minDelta: Double = 0.0): EarlyStopReport[M] = {
+    checkArgs(maxEpochs, batchSize, numWorkers)
     require(patience >= 1, s"patience must be >= 1, got $patience")
     val data = toExamples(df, featuresCol, labelCol)
       .repartition(numWorkers).persist()

@@ -74,6 +74,26 @@ class DeepMlpSpec extends SparkSpec {
       assert(gd.zip(gs).forall { case (a, b) => a == b },
         "gradients must be bit-identical for the shared layout")
     }
+    // addGradient into zeros equals gradient for every model, fused or
+    // default (`==`: a fused add may turn a -0.0 element into 0.0)
+    val models: Seq[DiffModel] = Seq(shallow, deep,
+      DeepMlpModel.init(4, Seq(5, 3), seed = 4L),
+      SoftmaxMlpModel.init(4, Seq(5), 3, seed = 5L),
+      SoftmaxMlpModel.init(4, Seq.empty, 3, seed = 6L),
+      LinearModel.init(4, seed = 7L),
+      ConvNetModel.init(h = 2, w = 2, kh = 1, kw = 1, nFilters = 2, seed = 8L),
+      ConvSoftmaxModel.init(h = 2, w = 2, kh = 1, kw = 1, nFilters = 2,
+        nClasses = 3, seed = 9L))
+    models.foreach { m =>
+      (0 until 5).foreach { k =>
+        val x = Array.fill(4)(rnd.nextDouble() * 4 - 2)
+        val y = (k % 2).toDouble
+        val acc = new Array[Double](m.weights.flat.length)
+        m.addGradient(x, y, acc)
+        assert(acc.toSeq == m.gradient(x, y).toSeq,
+          s"${m.getClass.getSimpleName}: addGradient into zeros != gradient")
+      }
+    }
   }
 
   test("deep MLP converges on separable data under EVERY update rule") {

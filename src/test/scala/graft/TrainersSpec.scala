@@ -281,4 +281,145 @@ class TrainersSpec extends SparkSpec {
     assert(r.bestEpoch >= 0 && r.bestEpoch < r.valLoss.length,
       s"bestEpoch ${r.bestEpoch}, curve ${r.valLoss}")
   }
+
+  /** The allocating per-example SGD loop: one fresh gradient per
+    * example summed into a per-batch array, one new weight vector per
+    * batch — the bit-level reference for the trainers' `localSgd`. */
+  private def referenceSgd(init: DiffModel, rows: Seq[(Array[Double], Double)],
+                           lr: Double, batchSize: Int): (ModelWeights, Long) = {
+    var m = init
+    var n = 0L
+    rows.grouped(batchSize).foreach { batch =>
+      val g = new Array[Double](m.weights.flat.length)
+      batch.foreach { case (x, y) =>
+        val gi = m.gradient(x, y)
+        var i = 0
+        while (i < g.length) { g(i) += gi(i); i += 1 }
+        n += 1
+      }
+      val scale = lr / batch.size
+      m = m.withWeights(m.weights.copy(
+        flat = Array.tabulate(g.length)(i => m.weights.flat(i) - scale * g(i))))
+    }
+    (m.weights, n)
+  }
+
+  private def bits(w: ModelWeights): Seq[Long] =
+    w.flat.toSeq.map(java.lang.Double.doubleToRawLongBits)
+
+  /** `n` seeded rows of `din` features; labels in {0..classes-1}. */
+  private def fixture(n: Int, din: Int, classes: Int, seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      (Seq.fill(din)(rnd.nextGaussian()), (i % classes).toDouble)
+    }.toDF("features", "label").coalesce(1)
+  }
+
+  test("fused localSgd is bit-identical to the per-example loop (every model, ragged batches)") {
+    // (model, feature count, classes)
+    val models: Seq[(DiffModel, Int, Int)] = Seq(
+      (SoftmaxMlpModel.init(6, Seq(5), 3, seed = 1L), 6, 3),
+      (DeepMlpModel.init(6, Seq(5, 4), seed = 2L), 6, 2),
+      (MlpModel.init(6, 5, seed = 3L), 6, 2),
+      (LinearModel.init(6, seed = 4L), 6, 2),
+      // 6x6 image, 3x3 kernels: conv models keep the default addGradient
+      (ConvSoftmaxModel.init(h = 6, w = 6, kh = 3, kw = 3, nFilters = 2,
+        nClasses = 3, seed = 5L), 36, 3))
+    val epochs = 2
+    val lr = 0.3
+    models.foreach { case (init, din, classes) =>
+      // 103 rows: batch sizes 7 and 32 leave a partial last batch
+      val df = fixture(103, din, classes, seed = 11L)
+      val rows = df.as[(Seq[Double], Double)].collect()
+        .map { case (x, y) => (x.toArray, y) }.toSeq
+      val name = init.getClass.getSimpleName
+      Seq(1, 7, 32).foreach { bs =>
+        var ref = init.weights
+        var refDist = init.weights
+        (0 until epochs).foreach { _ =>
+          ref = referenceSgd(init.withWeights(ref), rows, lr, bs)._1
+          // the one-partition distributed epoch: Averaging over one
+          // partition's MergeStats, exactly as the trainer applies it
+          val (w, n) = referenceSgd(init.withWeights(refDist), rows, lr, bs)
+          refDist = Trainers.Averaging.applyStats(refDist,
+            Trainers.MergeStats.of(w, n), new Array[Double](w.nParams))
+        }
+        val single = Trainers.trainSingleModel(df, "features", "label", init,
+          epochs = epochs, lr = lr, batchSize = bs)
+        assert(bits(single.weights) == bits(ref), s"$name single, batch $bs")
+        val dist = Trainers.trainDistributedModel(df, "features", "label", init,
+          numWorkers = 1, epochs = epochs, lr = lr, batchSize = bs,
+          rule = Trainers.Averaging)
+        assert(bits(dist.weights) == bits(refDist), s"$name distributed, batch $bs")
+      }
+    }
+  }
+
+  test("an empty partition leaves the weights bit-unchanged") {
+    val init = SoftmaxMlpModel.init(6, Seq(5), 3, seed = 1L)
+    val empty = fixture(0, 6, 3, seed = 1L)
+    val single = Trainers.trainSingleModel(empty, "features", "label", init,
+      epochs = 2, batchSize = 7)
+    assert(bits(single.weights) == bits(init.weights))
+    val dist = Trainers.trainDistributedModel(empty, "features", "label", init,
+      numWorkers = 1, epochs = 2, batchSize = 7, rule = Trainers.Adag())
+    assert(bits(dist.weights) == bits(init.weights))
+  }
+
+  test("training never writes into the caller's init weights") {
+    // in local[N] every task reads the same broadcast object, so an
+    // in-place SGD update without a per-partition copy would corrupt the
+    // driver's model (and race between tasks) without an error
+    val init = SoftmaxMlpModel.init(6, Seq(5), 3, seed = 1L)
+    val before = bits(init.weights)
+    val df = fixture(103, 6, 3, seed = 2L).repartition(4)
+    Trainers.trainDistributedModel(df, "features", "label", init,
+      numWorkers = 4, epochs = 2, batchSize = 7, rule = Trainers.Adag())
+    assert(bits(init.weights) == before, "trainDistributedModel")
+    Trainers.trainSingleModel(df, "features", "label", init, epochs = 2, batchSize = 7)
+    assert(bits(init.weights) == before, "trainSingleModel")
+    Trainers.trainEnsembleModel(df, "features", "label", init,
+      numModels = 3, epochs = 2, batchSize = 7)
+    assert(bits(init.weights) == before, "trainEnsembleModel")
+  }
+
+  /** Every public trainer, called with one argument overridden. */
+  private def everyTrainer(epochs: Int = 1, batchSize: Int = 8,
+                           workers: Int = 2): Seq[(String, () => Any)] = {
+    val init = LinearModel.init(2, seed = 1L)
+    Seq(
+      "trainSingleModel" -> (() => Trainers.trainSingleModel(linsep, "features",
+        "label", init, epochs = epochs, batchSize = batchSize)),
+      "trainDistributedModel" -> (() => Trainers.trainDistributedModel(linsep,
+        "features", "label", init, numWorkers = workers, epochs = epochs,
+        batchSize = batchSize)),
+      "trainDistributedWithHistory" -> (() => Trainers.trainDistributedWithHistory(
+        linsep, "features", "label", init, numWorkers = workers, epochs = epochs,
+        batchSize = batchSize)),
+      "trainWithEarlyStopping" -> (() => Trainers.trainWithEarlyStopping(linsep,
+        "features", "label", linsep, init, numWorkers = workers,
+        maxEpochs = epochs, batchSize = batchSize)),
+      "trainEnsembleModel" -> (() => Trainers.trainEnsembleModel(linsep,
+        "features", "label", init, numModels = workers, epochs = epochs,
+        batchSize = batchSize)))
+  }
+
+  private def assertRejected(calls: Seq[(String, () => Any)], arg: String): Unit =
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(arg), s"$name: ${e.getMessage}")
+    }
+
+  test("trainers reject batchSize < 1") {
+    assertRejected(everyTrainer(batchSize = 0), "batchSize")
+  }
+
+  test("trainers reject numWorkers < 1") {
+    assertRejected(everyTrainer(workers = 0).filterNot(_._1 == "trainSingleModel"),
+      "numWorkers")
+  }
+
+  test("trainers reject epochs < 0") {
+    assertRejected(everyTrainer(epochs = -1), "epochs")
+  }
 }
